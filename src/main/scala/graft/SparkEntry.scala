@@ -350,9 +350,9 @@ object SparkEntry {
         .groupBy(col("user_id"), col("ts"))
         .agg(max(col("event_id")).as("click_id"))
         .select(col("user_id"), col("ts").as("click_ts"), col("click_id"))
-      // bucketed form: no per-key window ever sees the raw event stream, so
-      // one hyperactive user cannot own a whole task at 100 TB (1-day
-      // buckets; any width is correct — differential spec pins equality)
+      // range-partitioned merge scan: the sampled (key, ts) bounds split a
+      // hyperactive user's history across tasks, so one user cannot own a
+      // whole task at 100 TB
       graft.operators.AsOf.asofJoinBucketed(
         purchases, clicks, key = "user_id", leftTs = "purchase_ts",
         rightTs = "click_ts")

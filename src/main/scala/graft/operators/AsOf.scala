@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow,
+  JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,85 +11,74 @@ import org.apache.spark.sql.types._
   * with `right.ts <= left.ts` (inclusive) — an operator Spark lacks as a
   * built-in (DuckDB: `ASOF JOIN`, used verbatim as the q56 oracle).
   *
-  * Spark-first shape: NOT a per-left-row subquery and NOT a range cross
-  * join — tag the two inputs, union, and carry a per-key running
-  * `last(right_payload, ignoreNulls)` over (key ORDER BY ts, tag) with
-  * right rows sorted BEFORE left rows at equal timestamps (that one sort
-  * bit IS the inclusive bound). One shuffle on the key, per-key windows
-  * (bounded, partitioned — never a global window), linear in
-  * |left| + |right|.
+  * Range-partitioned merge scan, the GapAudit two-phase pattern:
+  *  - right rows (tag 0) and left rows (tag 1) form one stream, exchanged
+  *    ONCE by `repartitionByRange(numShufflePartitions, key, ts, tag)` and
+  *    sorted within partitions. Spark's sampled range bounds split a
+  *    mega-key (one user owning a measurable fraction of all events) by
+  *    time, so no task holds a hot key's whole history — no window, no
+  *    hash exchange on the key, no bucket width to tune;
+  *  - pass 1: each partition reports its last key and that key's last
+  *    right payload (one row per partition, collected to the driver), which
+  *    folds them into each partition's carry-in: the latest right row of
+  *    its first key held by earlier partitions. Partitions whose rows of
+  *    that key are all left rows pass the carry through;
+  *  - pass 2 (lazy): a linear merge scan gives each left row the latest
+  *    right row at or before it, starting from the broadcast carry-in.
+  *    Right rows sort before left rows at equal (key, ts): that tag bit IS
+  *    the inclusive bound.
+  * Both passes read one shuffle output (the sorted frame's `toRdd`, taken
+  * once). Calling the operator therefore runs jobs up front: the
+  * range-bound sample and the boundary collect, and under adaptive
+  * execution also the exchange's map stage (the shuffle write); the merge
+  * scan runs with the caller's action.
   *
-  * Precondition for deterministic output: the right side must be unique
-  * per (key, ts) — pre-aggregate ties (e.g. keep max id) or the carried
-  * match among equal-ts right rows is plan-dependent. Left-outer
-  * semantics: left rows with no prior right row get a null match struct.
-  *
-  * At 100 TB: the shuffle is the same hash-on-key exchange a groupBy
-  * costs; a hot key concentrates ONE user's history in a task. That skew
-  * defense is no longer prose — [[asofJoinBucketed]] bounds every task by
-  * (key, time-bucket) via the GapAudit two-phase pattern: join within the
-  * bucket, fix boundaries with the previous bucket's closing state.
-  */
+  * Keys must be orderable; they compare by their binary (UnsafeRow) form,
+  * so a floating-point key should be normalized first (0.0 vs -0.0).
+  * `ts` columns are any orderable type both sides share (timestamps,
+  * integers). Precondition for deterministic output: the right side must
+  * be unique per (key, ts) — pre-aggregate ties (e.g. keep max id) or the
+  * match among equal-ts right rows is plan-dependent. Left-outer semantics:
+  * left rows with no prior right row get a null match struct. */
 object AsOf {
 
-  /** Auto-size [[asofJoinBucketed]]'s `bucketWidth` from measured per-key
-    * density — the Dedup.ngramStrategyFor discipline (decide physical
-    * parameters from bounded stats, not folklore). Any width is CORRECT;
-    * this picks one that bounds the densest (key, bucket) cell near
-    * `targetRowsPerCell` rows:
-    *
-    *  - per-key (rows, min ts, max ts) via partial-agg groupBy, then the
-    *    `topKeys` DENSEST keys by row count (TakeOrdered — bounded on the
-    *    driver by construction). Top-by-count, not a random key sample: the
-    *    mega-key IS the tail this operator defends against, and a uniform
-    *    sample of keys would miss it.
-    *  - densest rows-per-time-unit over keys whose span is positive (a key
-    *    whose every row shares one timestamp lands in one cell at ANY
-    *    width — no width defends it, so it casts no vote);
-    *  - width = targetRowsPerCell / maxDensity, clamped to [1, span of the
-    *    densest key] so buckets neither degenerate to per-row cells nor
-    *    exceed the history they're splitting.
-    *
-    * Returns `default` when the right side is empty or zero-span. Units
-    * match [[asofJoinBucketed]]: microseconds for timestamp columns, the
-    * column's own units for integral columns. Cost: one partial-agg
-    * aggregation job over the right side — run it once per table shape,
-    * not per query, if the extra action matters. */
-  def autoBucketWidth(right: DataFrame, key: String, rightTs: String,
-      targetRowsPerCell: Long = 65536, topKeys: Int = 64,
-      default: Long = 86400L * 1000000L): Long = {
-    require(targetRowsPerCell >= 1, "targetRowsPerCell must be >= 1")
-    require(topKeys >= 1, "topKeys must be >= 1")
-    val tsCol = right.schema(rightTs).dataType match {
-      case TimestampType | TimestampNTZType | DateType =>
-        unix_micros(col(rightTs).cast("timestamp"))
-      case LongType | IntegerType | ShortType | ByteType =>
-        col(rightTs).cast("long")
-      case other => throw new IllegalArgumentException(
-        s"autoBucketWidth needs a timestamp or integral ts column, got $other")
+  private val Reserved = Seq("_k", "_t", "_tag", "_r", "_l")
+
+  /** The raw union the merge scan reads: (_k, _t, _tag, _r = right row,
+    * _l = left row), range-partitioned on (_k, _t, _tag) and sorted within
+    * partitions. Rows with a null key or ts are not in it. */
+  private[graft] def rangeSorted(left: DataFrame, right: DataFrame,
+      key: String, leftTs: String, rightTs: String): DataFrame = {
+    val r = right.filter(col(key).isNotNull && col(rightTs).isNotNull)
+      .select(col(key).as("_k"), col(rightTs).as("_t"), lit(0).as("_tag"),
+        struct(right.columns.map(col).toIndexedSeq: _*).as("_r"))
+    val l = left.filter(col(key).isNotNull && col(leftTs).isNotNull)
+      .select(col(key).as("_k"), col(leftTs).as("_t"), lit(1).as("_tag"),
+        lit(null).cast(r.schema("_r").dataType).as("_r"),
+        struct(left.columns.map(col).toIndexedSeq: _*).as("_l"))
+    val order = Seq(col("_k"), col("_t"), col("_tag"))
+    r.withColumn("_l", lit(null).cast(l.schema("_l").dataType))
+      .unionByName(l)
+      .repartitionByRange(left.sparkSession.sessionState.conf.numShufflePartitions,
+        order: _*)
+      .sortWithinPartitions(order: _*)
+  }
+
+  /** Running (key, latest right payload) over one sorted partition of
+    * [[rangeSorted]]; starts from a carry-in (null, null when none). */
+  private final class Scan(keyType: DataType, rightWidth: Int,
+      var key: UnsafeRow, var payload: InternalRow) {
+    private val keyOf =
+      UnsafeProjection.create(Seq(BoundReference(0, keyType, nullable = false)))
+
+    /** Advances past `row`; true when it is a left row. */
+    def step(row: InternalRow): Boolean = {
+      val k = keyOf(row)
+      if (key == null || !key.equals(k)) { key = k.copy(); payload = null }
+      val isRight = row.getInt(2) == 0
+      if (isRight) payload = row.getStruct(3, rightWidth).copy()
+      !isRight
     }
-    val stats = right
-      .filter(col(key).isNotNull && col(rightTs).isNotNull)
-      .select(col(key).as("_k"), tsCol.as("_t"))
-      .groupBy(col("_k"))
-      .agg(count(lit(1)).as("_n"), min(col("_t")).as("_lo"),
-        max(col("_t")).as("_hi"))
-      .orderBy(desc("_n"), asc("_k"))
-      .limit(topKeys)
-      .select(col("_n"), col("_lo"), col("_hi"))
-      .collect()
-    var bestDensity = 0.0
-    var bestSpan = 0L
-    for (r <- stats) {
-      val span = r.getLong(2) - r.getLong(1)
-      if (span > 0L) {
-        val d = r.getLong(0).toDouble / span
-        if (d > bestDensity) { bestDensity = d; bestSpan = span }
-      }
-    }
-    if (bestDensity <= 0.0) default
-    else math.max(1L,
-      math.min(bestSpan, (targetRowsPerCell / bestDensity).toLong))
   }
 
   /** `left` as-of `right` on key/ts columns; returns every left column
@@ -96,144 +87,53 @@ object AsOf {
     * NULL semantics follow SQL ASOF (the DuckDB oracle): a NULL key or
     * NULL ts never matches — right rows with either are dropped up front
     * (they could otherwise be carried as a bogus "earliest ever" match),
-    * left rows with either survive with a null `asof` struct. */
-  def asofJoin(left: DataFrame, right: DataFrame,
-      key: String, leftTs: String, rightTs: String): DataFrame = {
-    val reserved = Seq("_k", "_t", "_tag", "_r", "_l")
-    val clash = (left.columns ++ right.columns).filter(reserved.contains) ++
-      left.columns.filter(_ == "asof")
-    require(clash.isEmpty,
-      s"asofJoin reserves column names ${reserved.mkString(", ")} and the " +
-        s"output column 'asof'; input carries ${clash.mkString(", ")}")
-    val rPayload = struct(right.columns.map(col).toIndexedSeq: _*)
-    val lPayload = struct(left.columns.map(col).toIndexedSeq: _*)
-    val r = right
-      .filter(col(key).isNotNull && col(rightTs).isNotNull)
-      .select(
-        col(key).as("_k"), col(rightTs).as("_t"),
-        lit(0).as("_tag"), rPayload.as("_r"))
-    val rType = r.schema("_r").dataType
-    val l = left.select(
-      col(key).as("_k"), col(leftTs).as("_t"),
-      lit(1).as("_tag"), lit(null).cast(rType).as("_r"), lPayload.as("_l"))
-    val all = r.withColumn("_l",
-      lit(null).cast(l.schema("_l").dataType)).unionByName(l)
-    // right (tag 0) sorts before left (tag 1) at equal ts -> inclusive bound
-    val w = Window.partitionBy(col("_k"))
-      .orderBy(col("_t"), col("_tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    all
-      .withColumn("asof", last(col("_r"), ignoreNulls = true).over(w))
-      .filter(col("_tag") === 1)
-      .select(col("_l.*"), col("asof"))
-  }
-
-  /** Time-bucketed as-of join — identical contract and output to
-    * [[asofJoin]], but NO per-key window ever sees the raw row stream, so a
-    * mega-key (one user owning a measurable fraction of all events — the
-    * 100 TB skew case) is bounded by its densest (key, bucket) cell instead
-    * of its entire history in one task.
-    *
-    * Two phases (the GapAudit boundary-fixup pattern):
-    *  1. per (key, bucket): the bucket's CLOSING right payload
-    *     (`max_by(payload, ts)`), then a per-key running `last` over the
-    *     bucket SUMMARIES (≤ #buckets rows per key, never row-scaled) gives
-    *     each left bucket its carry-in state — the latest closing state of
-    *     any strictly earlier bucket;
-    *  2. the in-bucket as-of runs the [[asofJoin]] union-window partitioned
-    *     by (key, bucket); rows with no in-bucket match fall back to the
-    *     carry-in, joined on the same (key, bucket) hash partitioning the
-    *     window already established (no extra exchange for the big side).
-    *
-    * `bucketWidth` is in MICROSECONDS for timestamp `ts` columns, in the
-    * column's own units for integral `ts` columns. Bucketing uses exact
-    * integral division (RangeJoin.idiv) — `/` on longs is double division
-    * and mis-rounds beyond 2^53. Width tuning trades the number of bucket
-    * summaries (small width) against in-bucket task size (large width); any
-    * width is correct. */
+    * left rows with either bypass the exchange with a null `asof` struct. */
   def asofJoinBucketed(left: DataFrame, right: DataFrame,
-      key: String, leftTs: String, rightTs: String,
-      bucketWidth: Long = 86400L * 1000000L): DataFrame = {
-    require(bucketWidth >= 1, s"bucketWidth must be >= 1, got $bucketWidth")
-    val reserved = Seq("_k", "_t", "_tag", "_r", "_l", "_b", "_vb", "_in", "_cin")
-    val clash = (left.columns ++ right.columns).filter(reserved.contains) ++
+      key: String, leftTs: String, rightTs: String): DataFrame = {
+    val clash = (left.columns ++ right.columns).filter(Reserved.contains) ++
       left.columns.filter(_ == "asof")
     require(clash.isEmpty,
-      s"asofJoinBucketed reserves column names ${reserved.mkString(", ")} and " +
+      s"asofJoinBucketed reserves column names ${Reserved.mkString(", ")} and " +
         s"the output column 'asof'; input carries ${clash.mkString(", ")}")
+    val sorted = rangeSorted(left, right, key, leftTs, rightTs)
+    val keyType = sorted.schema("_k").dataType
+    val rType = sorted.schema("_r").dataType.asInstanceOf[StructType]
+    val lType = sorted.schema("_l").dataType.asInstanceOf[StructType]
+    val (nR, nL) = (rType.length, lType.length)
+    val rows = sorted.queryExecution.toRdd
 
-    def bucketOf(c: Column, dt: DataType): Column = dt match {
-      case TimestampType | TimestampNTZType | DateType =>
-        RangeJoin.idiv(unix_micros(c.cast("timestamp")), bucketWidth)
-      case LongType | IntegerType | ShortType | ByteType =>
-        RangeJoin.idiv(c.cast("long"), bucketWidth)
-      case other => throw new IllegalArgumentException(
-        s"asofJoinBucketed needs a timestamp or integral ts column, got $other")
+    // pass 1: (partition, last key, that key's last right payload or null)
+    val tails = rows.mapPartitionsWithIndex { (p, it) =>
+      val s = new Scan(keyType, nR, null, null)
+      it.foreach(s.step)
+      if (s.key == null) Iterator.empty else Iterator((p, s.key, s.payload))
+    }.collect()
+    val carry = Array.fill(rows.getNumPartitions)((null: UnsafeRow, null: InternalRow))
+    var next = 0
+    var k: UnsafeRow = null
+    var payload: InternalRow = null
+    for ((p, lastKey, lastRight) <- tails) {
+      while (next <= p) { carry(next) = (k, payload); next += 1 }
+      if (k != null && k.equals(lastKey)) { if (lastRight != null) payload = lastRight }
+      else { k = lastKey; payload = lastRight }
     }
+    val carryIn = rows.sparkContext.broadcast(carry)
 
-    val rPayload = struct(right.columns.map(col).toIndexedSeq: _*)
-    val lPayload = struct(left.columns.map(col).toIndexedSeq: _*)
-    val r = right
-      .filter(col(key).isNotNull && col(rightTs).isNotNull)
-      .select(col(key).as("_k"), col(rightTs).as("_t"),
-        lit(0).as("_tag"), rPayload.as("_r"))
-      .withColumn("_b", bucketOf(col("_t"), right.schema(rightTs).dataType))
-    val rType = r.schema("_r").dataType
-
-    // SQL ASOF null semantics: a left row with a null key or ts can never
-    // match — route it around both phases straight to a null `asof`
-    val lNull = left.filter(col(key).isNull || col(leftTs).isNull)
-      .select(lPayload.as("_l"))
-    val lOk = left.filter(col(key).isNotNull && col(leftTs).isNotNull)
-      .select(col(key).as("_k"), col(leftTs).as("_t"),
-        lit(1).as("_tag"), lit(null).cast(rType).as("_r"), lPayload.as("_l"))
-      .withColumn("_b", bucketOf(col("_t"), left.schema(leftTs).dataType))
-    val lType = lOk.schema("_l").dataType
-
-    // phase 1: closing state per (key, right-bucket), then carry-in per
-    // (key, left-bucket) = last closing state of any STRICTLY earlier
-    // bucket. A closing row becomes visible at bucket c+1 (sort tag 0 at
-    // equal visibility, so it is admitted); the window runs over bucket
-    // summaries only — per-key cardinality is #buckets, not #rows.
-    val closing = r.groupBy(col("_k"), col("_b"))
-      .agg(max_by(col("_r"), col("_t")).as("_cin"))
-    val leftBuckets = lOk.select(col("_k"), col("_b")).distinct()
-    val carrySrc = closing
-      .select(col("_k"), (col("_b") + 1).as("_vb"), lit(0).as("_tag"), col("_cin"))
-      .unionByName(leftBuckets.select(col("_k"), col("_b").as("_vb"),
-        lit(1).as("_tag"), lit(null).cast(rType).as("_cin")))
-    val wCarry = Window.partitionBy(col("_k")).orderBy(col("_vb"), col("_tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carry = carrySrc
-      .withColumn("_cin", last(col("_cin"), ignoreNulls = true).over(wCarry))
-      .filter(col("_tag") === 1)
-      .select(col("_k"), col("_vb").as("_b"), col("_cin"))
-
-    // phase 2: the asofJoin union-window, partitioned by (key, bucket) —
-    // the raw row stream is never windowed per key alone. The carry-in is
-    // INJECTED as one pseudo-right row per (key, left-bucket) with a NULL
-    // timestamp (asc_nulls_first sorts it before every real row of the
-    // bucket), so the big side costs exactly ONE shuffle + window — no
-    // join after the window. Real null-ts rows can't collide: null-ts
-    // right rows are dropped and null-ts left rows bypass via lNull.
-    val tsType = lOk.schema("_t").dataType
-    val carryRows = carry.filter(col("_cin").isNotNull)
-      .select(col("_k"), lit(null).cast(tsType).as("_t"),
-        lit(-1).as("_tag"), col("_cin").as("_r"),
-        lit(null).cast(lType).as("_l"), col("_b"))
-    val all = r.withColumn("_l", lit(null).cast(lType))
-      .unionByName(lOk)
-      .unionByName(carryRows)
-    val wIn = Window.partitionBy(col("_k"), col("_b"))
-      .orderBy(col("_t").asc_nulls_first, col("_tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val matched = all
-      .withColumn("asof", last(col("_r"), ignoreNulls = true).over(wIn))
-      .filter(col("_tag") === 1)
-      .select(col("_l"), col("asof"))
-
-    matched
-      .unionByName(lNull.withColumn("asof", lit(null).cast(rType)))
-      .select(col("_l.*"), col("asof"))
+    // pass 2: merge scan over the same shuffle output
+    val merged = rows.mapPartitionsWithIndex { (p, it) =>
+      val (key0, payload0) = carryIn.value(p)
+      val s = new Scan(keyType, nR, key0, payload0)
+      val asof = new GenericInternalRow(1)
+      val out = new JoinedRow
+      it.filter(s.step).map { row =>
+        asof.update(0, s.payload)
+        out(row.getStruct(4, nL), asof): InternalRow
+      }
+    }
+    val matched = GraftBridge.dataFrame(left.sparkSession, merged,
+      StructType(lType.fields :+ StructField("asof", rType, nullable = true)))
+    val unmatchable = left.filter(col(key).isNull || col(leftTs).isNull)
+      .select(left.columns.map(col).toIndexedSeq :+ lit(null).cast(rType).as("asof"): _*)
+    matched.unionByName(unmatchable)
   }
 }

@@ -1,7 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ↔ Expression bridge for third-party Catalyst expressions.
   * `ExpressionUtils` is private[sql] in Spark 4; this is the standard
@@ -10,4 +13,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over Catalyst rows (`internalCreateDataFrame` is private[sql]). */
+  def dataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

@@ -104,25 +104,19 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("q56/q63: no per-key window over the raw event union (mega-key defense)") {
-    // the round-3 verdict's last prose-only skew defense, now a plan gate:
-    // any window whose expressions touch the raw right payload (_r) must be
-    // partitioned by (key, bucket) — key-only windows are allowed solely
-    // over the per-bucket closing summaries
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+  test("q56/q63: as-of hops are range-exchange merge scans, no window") {
+    // mega-key defense: no window (and so no per-key window) anywhere in
+    // the funnel; each hop's output is AsOf's merge scan (a LogicalRDD over
+    // the one (_k, _t, _tag) range exchange AsOfSpec gates)
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    import org.apache.spark.sql.execution.LogicalRDD
     Seq("q56_asof_join", "q63_funnel_asof").foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
-      val wins = plan.collect { case w: LWindow => w }
-      assert(wins.nonEmpty, s"$name lost its windows entirely")
-      wins.foreach { w =>
-        val touchesRaw = w.windowExpressions.exists(_.collect {
-          case a: AttributeReference if a.name == "_r" => a
-        }.nonEmpty)
-        if (touchesRaw)
-          assert(w.partitionSpec.size >= 2,
-            s"$name windows the raw union per key alone: $w")
-      }
+      val df = SparkEntry.queries(name)(spark, sf)
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case w: LWindow => w }.isEmpty, s"$name re-grew a window")
+      assert(plan.collect { case r: LogicalRDD => r }.nonEmpty,
+        s"$name does not read the as-of merge scan:\n$plan")
+      assert(df.count() > 0, name)
     }
   }
 
