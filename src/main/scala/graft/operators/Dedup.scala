@@ -401,7 +401,6 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, sampleDocs: Int = 2048,
       meanDfCutoff: Double = 3.0): String = {
-    val base = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
     // the sample is bounded by construction (sampleDocs rows), so the df
     // statistics are computed DRIVER-SIDE over the collected rows — the
     // Ivf.fit/Pq.fit trainer pattern — instead of a cluster aggregation
@@ -409,7 +408,7 @@ object Dedup {
     // (measured ~0.5 s of the q57 leg for a 2048-doc sample). Same
     // HashSample plan + undershoot rule, so the sampled doc set — and the
     // decision — is identical to the aggregation form.
-    val rows = HashSample.collectRows(base, "id", sampleDocs)
+    val rows = strategySample(docs, idCol, textCol, sampleDocs)
     var postings = 0L
     val distinct = new java.util.HashSet[String]()
     rows.foreach { r =>
@@ -422,6 +421,18 @@ object Dedup {
       "prefix"
     else "count"
   }
+
+  /** Longest text prefix (chars) the strategy sample collects per document:
+    * the collect stays bounded by sampleDocs × this cap however large the
+    * documents are. Both strategies return the same rows, so a statistic
+    * taken over prefixes can change only the plan, never the output. */
+  private[operators] val StrategySampleChars = 65536
+
+  /** The (id, text prefix) rows ngramStrategyFor computes its statistics on. */
+  private[operators] def strategySample(docs: DataFrame, idCol: String, textCol: String,
+      sampleDocs: Int): Array[org.apache.spark.sql.Row] =
+    HashSample.collectRows(docs.select(col(idCol).cast("long").as("id"),
+      substring(col(textCol), 1, StrategySampleChars).as("text")), "id", sampleDocs)
 
   /** n-gram near-dup join with the physical strategy chosen from sampled
     * corpus statistics (ngramStrategyFor). */

@@ -3,6 +3,7 @@ package graft.operators
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageInputStream
 
 /** Minimal pure-Java MJPEG-in-AVI codec — just enough of the public RIFF/AVI
   * container format (Microsoft "AVI RIFF File Reference", public since 1992)
@@ -25,8 +26,28 @@ object MjpegAvi {
     def durationMs: Long = microSecPerFrame * frames.length / 1000L
     /** Decode one frame's JPEG payload; None if undecodable. */
     def decodeFrame(i: Int): Option[BufferedImage] =
-      try Option(ImageIO.read(new ByteArrayInputStream(frames(i))))
+      try Option(readImage(frames(i)))
       catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** Decode an in-memory image (PNG, JPEG, ...) through a memory-cached
+    * image stream: no temp file per decode, and no process-global
+    * `ImageIO.setUseCache` switch. The body is `ImageIO.read(stream)`'s
+    * reader lookup and read with one unconditional close: `ImageIO.read`
+    * closes the stream itself except when no reader matches, and closing
+    * it a second time throws. Null when no reader recognizes the bytes; a
+    * corrupt blob throws. */
+  private[operators] def readImage(bytes: Array[Byte]): BufferedImage = {
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+    try {
+      val readers = ImageIO.getImageReaders(in)
+      if (!readers.hasNext) null
+      else {
+        val reader = readers.next()
+        reader.setInput(in, true, true)
+        try reader.read(0, reader.getDefaultReadParam) finally reader.dispose()
+      }
+    } finally in.close()
   }
 
   // ---- encode ---------------------------------------------------------

@@ -175,12 +175,6 @@ object Multimodal {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
-      // ImageIO defaults to DISK-backed image-input-stream caches (a temp
-      // file created and deleted per decode); the blobs here are in-memory
-      // byte arrays, so the file cache is pure overhead — switch this
-      // JVM's decoders to memory caching once per task (global, idempotent,
-      // output-identical; covers the MjpegAvi per-frame reads too)
-      ImageIO.setUseCache(false)
       it.grouped(BatchSize).flatMap { batch =>
         batch.iterator.map { row =>
           val bytes = row.media
@@ -190,7 +184,7 @@ object Multimodal {
               // magic bytes throw CMMException/IllegalArgumentException from
               // deep inside ImageIO — the contract is "undecodable -> stub
               // row", never a task failure
-              val img = try ImageIO.read(new ByteArrayInputStream(bytes))
+              val img = try MjpegAvi.readImage(bytes)
                 catch { case scala.util.control.NonFatal(_) => null }
               if (img == null) stubFeatures(row, frameStride) // undecodable blob
               else {
@@ -291,9 +285,8 @@ object Multimodal {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
-      ImageIO.setUseCache(false) // see decode(): blobs are in-memory
       it.filter(_.kind == "image").flatMap { row =>
-        val img = try ImageIO.read(new ByteArrayInputStream(row.media))
+        val img = try MjpegAvi.readImage(row.media)
           catch { case scala.util.control.NonFatal(_) => null } // see decode()
         if (img == null) Iterator.empty
         else {

@@ -15,6 +15,16 @@ import graft.fixtures.TranscriptGen
   *    narrow dependency, arbitrarily parallel, no repartition needed first
   *    (unlike the reference, which serializes page→column→block on one
   *    process, /root/reference/diary_ocr.py:330-366).
+  *  - **Module rows skip the object encoder.** `modules` is the
+  *    `graft.plans.ModuleRows` plan node over the extraction Dataset: its
+  *    exec reads the extractor's `TurnExtraction` objects straight out of
+  *    the extractor's `mapPartitions` (no serialize/deserialize pair in
+  *    between) and writes each module into one reused `UnsafeRow`,
+  *    byte-identical to the derived `ExtractedModule` encoder. A pruning
+  *    rule narrows it to the columns the query uses (`count()` writes
+  *    none). `modules` installs the node's planner strategy and rule on
+  *    its Dataset's session (idempotent); `GraftExtensions` injects both
+  *    too. `errors`, `cleanTurns` and `headerEntities` keep the encoder.
   *  - **Dimensions are broadcast.** The entity-id universe and the 35 catalogs
   *    travel to executors once via a driver broadcast consumed inside the
   *    extractor (the J1/J2 broadcast-hash-join semantics of
@@ -139,12 +149,12 @@ object ExtractPipeline {
     }
   }
 
-  /** Extracted modules, un-deduplicated (one row per parsed module). */
-  def modules(ex: Dataset[TurnExtraction]): Dataset[ExtractedModule] = {
-    val spark = ex.sparkSession
-    import spark.implicits._
-    ex.flatMap(_.modules)
-  }
+  /** Extracted modules, un-deduplicated (one row per parsed module),
+    * written straight to `UnsafeRow`s by the `graft.plans.ModuleRows` plan
+    * node instead of the derived encoder (same rows and schema). Installs
+    * the node's planner strategy and pruning rule on `ex`'s session. */
+  def modules(ex: Dataset[TurnExtraction]): Dataset[ExtractedModule] =
+    graft.plans.ModuleRows.of(ex)
 
   def errors(ex: Dataset[TurnExtraction]): Dataset[ExtractionError] = {
     val spark = ex.sparkSession

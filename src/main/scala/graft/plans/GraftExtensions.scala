@@ -141,6 +141,8 @@ object FuseHofCosine extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => FuseHofCosine)
+    e.injectOptimizerRule(_ => PruneModuleRows)
+    e.injectPlannerStrategy(_ => ModuleRowsStrategy)
     e.injectFunction((
       FunctionIdentifier("cosine_similarity"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
@@ -158,12 +160,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Live-session install (spec/REPL path): the same rule via the public
-    * `experimental.extraOptimizations` hook + temp-function registration. */
+  /** Live-session install (spec/REPL path): the same rules and strategy via
+    * the public `experimental` hooks + temp-function registration. */
   def install(spark: org.apache.spark.sql.SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(FuseHofCosine))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ FuseHofCosine
+    ModuleRows.setup(spark)
     CosineSimilarity.register(spark)
     graft.functions.ArrayJaccard.register(spark)
     OrderedConcat.register(spark)

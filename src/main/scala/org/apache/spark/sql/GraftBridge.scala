@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
 
@@ -17,4 +18,8 @@ object GraftBridge {
   /** A DataFrame over Catalyst rows (`internalCreateDataFrame` is private[sql]). */
   def dataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** A typed Dataset over a logical plan (`Dataset.apply` is private[sql]). */
+  def dataset[T: Encoder](spark: SparkSession, plan: LogicalPlan): Dataset[T] =
+    classic.Dataset[T](spark.asInstanceOf[classic.SparkSession], plan)
 }

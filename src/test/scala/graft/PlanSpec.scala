@@ -59,15 +59,48 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("object-source extraction has no encoder round-trip (single serialize)") {
+    // The single serialize is the ModuleRows node: it reads the extractor's
+    // TurnExtraction objects and writes the module rows itself, so no
+    // TurnExtraction is ever serialized or deserialized by an encoder.
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec,
+      SerializeFromObjectExec}
+    import org.apache.spark.sql.types.ObjectType
+    import graft.plans.ModuleRowsExec
+    val turnExtraction = ObjectType(classOf[graft.core.TurnExtraction])
     val ctx = ExtractPipeline.makeContext(TranscriptGen.allEntityIds)
     val turns = ExtractPipeline.transcripts(spark, 50L, 4)
-    val p = ExtractPipeline.modules(ExtractPipeline.extractTurns(turns, ctx))
-      .queryExecution.executedPlan.toString
-    assert("SerializeFromObject".r.findAllIn(p).size == 1, p)
+    for (objectSource <- Seq(true, false)) {
+      val ex = if (objectSource) ExtractPipeline.extractTurns(turns, ctx)
+        else ExtractPipeline.extract(turns, ctx)
+      val p = ExtractPipeline.modules(ex).queryExecution.executedPlan
+      val nodes = p.collect { case m: ModuleRowsExec => m }
+      assert(nodes.size == 1, p)
+      assert(nodes.head.child.isInstanceOf[MapPartitionsExec] &&
+        nodes.head.child.output.map(_.dataType) == Seq(turnExtraction), p)
+      assert(p.collect { case d: DeserializeToObjectExec
+        if d.outputObjAttr.dataType == turnExtraction => d }.isEmpty, p)
+      val serializes = p.collect { case s: SerializeFromObjectExec => s }
+      assert(serializes.forall(_.child.output.head.dataType != turnExtraction), p)
+      // the object chain (generator -> extractor -> module rows) has none at all
+      if (objectSource) assert(serializes.isEmpty, p)
+    }
     // results identical to the pruning (table-facing) path
     val a = ExtractPipeline.modules(ExtractPipeline.extractTurns(turns, ctx)).collect().toSet
     val b = ExtractPipeline.modules(ExtractPipeline.extract(turns, ctx)).collect().toSet
     assert(a == b)
+  }
+
+  test("modules(...).count() plans ModuleRows with an empty output") {
+    import graft.plans.{ModuleRows, ModuleRowsExec, ModulesBaseline}
+    val ctx = ExtractPipeline.makeContext(TranscriptGen.allEntityIds)
+    val ex = ExtractPipeline.extract(ExtractPipeline.transcripts(spark, 50L, 4), ctx)
+    val mods = ExtractPipeline.modules(ex)
+    val qe = mods.groupBy().count().queryExecution // the plan Dataset.count() runs
+    val logical = qe.optimizedPlan.collect { case m: ModuleRows => m }
+    assert(logical.size == 1 && logical.head.output.isEmpty, qe.optimizedPlan)
+    val physical = qe.sparkPlan.collect { case m: ModuleRowsExec => m }
+    assert(physical.size == 1 && physical.head.output.isEmpty, qe.sparkPlan)
+    assert(mods.count() == ModulesBaseline.modules(ex).count())
   }
 
   test("q25 zone audit joins its dimensions broadcast, never shuffled") {

@@ -242,6 +242,17 @@ class DedupSpec extends AnyFunSuite {
     assert(auto == explicit)
   }
 
+  test("ngramStrategyFor's collected sample keeps a 10 MB document under the text cap") {
+    val huge = "lorem ipsum dolor " * (10 * 1024 * 1024 / 18)
+    val docs = ((0L, huge) +: (1 until 40).map(i => (i.toLong, s"short doc $i"))).toDF("doc_id", "text")
+    val rows = Dedup.strategySample(docs, "doc_id", "text", 2048)
+    assert(rows.length == 40)
+    assert(rows.forall(_.getString(1).length <= Dedup.StrategySampleChars))
+    assert(rows.find(_.getLong(0) == 0L).get.getString(1) == huge.take(Dedup.StrategySampleChars))
+    assert(rows.filter(_.getLong(0) != 0L).forall(_.getString(1).startsWith("short doc ")))
+    assert(Set("count", "prefix").contains(Dedup.ngramStrategyFor(docs, "doc_id", "text")))
+  }
+
   test("ngram join at threshold 1.0 finds exactly the identical-shingle-set pairs") {
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "a b c d x"))
       .toDF("doc_id", "text")
@@ -689,5 +700,31 @@ class MultimodalSpec extends AnyFunSuite {
     val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(
       media.collect().find(_.doc_id == 0L).get.media))
     assert((back.getRGB(0, 0) & 0xffffff) == (src.getRGB(0, 0) & 0xffffff))
+  }
+
+  test("decode and resize leave ImageIO's process-wide cache flag alone; output pinned") {
+    import javax.imageio.ImageIO
+    val before = ImageIO.getUseCache
+    ImageIO.setUseCache(true)
+    try {
+      val docs = (0L until 6L).map(i => (i, s"doc $i words")).toDF("doc_id", "text")
+      val media = Multimodal.synthesizeMedia(docs, spark)
+      val feats = Multimodal.decode(media).collect().sortBy(_.doc_id).map(_.toString)
+      assert(ImageIO.getUseCache)
+      val thumbs = Multimodal.resizeImages(media, 16, 16).collect().sortBy(_.doc_id)
+        .map(t => (t.doc_id, t.width, t.height, java.util.Arrays.hashCode(t.png)))
+      assert(ImageIO.getUseCache)
+      // the features and thumbnails the global-switch form produced
+      assert(feats.toSeq == Seq(
+        "MediaFeatures(0,image,true,64,64,12420,7.614739042754948,List(1, 0, 0, 0, 0, 0, 0, 0),1,0.0)",
+        "MediaFeatures(1,audio,true,0,0,4060,6.249694706775106,List(25, 12, 12, 12, 12, 13, 13, 13),1,0.25888964989183744)",
+        "MediaFeatures(2,video,true,96,64,23124,7.605964435099035,List(0, 0, 0, 0, 1, 0, 1, 1),1,0.0)",
+        "MediaFeatures(3,image,true,67,64,12996,7.618268165489574,List(0, 0, 0, 0, 0, 0, 1, 0),1,0.0)",
+        "MediaFeatures(4,audio,true,0,0,4108,6.037828657032604,List(21, 21, 20, 0, 21, 20, 0, 20),1,0.25888431991056005)",
+        "MediaFeatures(5,video,true,96,64,15526,7.616921083173165,List(0, 0, 0, 0, 0, 1, 1, 1),1,0.0)"))
+      assert(thumbs.toSeq == Seq((0L, 16, 16, -976237996), (3L, 16, 15, -1521740085)))
+      // bytes no reader recognizes decode to null (the stub path), not a throw
+      assert(MjpegAvi.readImage("not an image".getBytes("US-ASCII")) == null)
+    } finally ImageIO.setUseCache(before)
   }
 }
